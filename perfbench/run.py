@@ -1,6 +1,6 @@
 """tokenqc benchmark: ``QCRunner.run`` end to end on seeded synthetic input.
 
-    python3 perfbench/run.py --workload qc_token_gates --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload qc_token_gates --seed 1 --seconds 8 --trace 0
 
 Run from the root of a tokenqc checkout. One process, one Spark session
 over ``local[<cores>]``:
@@ -8,8 +8,8 @@ over ``local[<cores>]``:
 - generate (or reuse) the seeded input, outside every timed window;
 - set-up: session start plus input registration (``setup_s``);
 - the first ``QCRunner.run`` of the fresh session (``cold_run_s``);
-- at least two warm runs, more until ``--seconds`` of run wall is
-  measured (medians: ``qc_rows_per_s``, ``cpu_s_per_mrow``).
+- warm runs until ``--seconds`` of run wall is measured (medians:
+  ``qc_rows_per_s``, ``cpu_s_per_mrow``).
 
 Every run's output is checked against closed-form expectations.
 
@@ -36,7 +36,7 @@ import layers
 import sessions
 
 ROWS = 16_000
-MIN_WARM_RUNS = 2
+MIN_WARM_RUNS = 1
 RESUME_BATCHES = 4  # the crash leaves the last half of them uncommitted
 WORKLOADS = ("qc_token_gates", "qc_resume")
 FAMILIES = (
