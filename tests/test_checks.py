@@ -350,8 +350,9 @@ def test_degeneracy_facets_opt_in_and_null_safe(spark):
 
 def test_degeneracy_fused_equals_two_standalone_passes(spark):
     """r6 optimization pin: with BOTH facets enabled the gate runs one
-    fused Arrow pass (textqc.token_degen_stats) — its violation rows
-    must equal the union the two standalone ops produce, byte for byte
+    fused Arrow pass (the entropy and k-gram kernels in one
+    textqc._token_pass) — its violation rows must equal the union the
+    two standalone ops produce, byte for byte
     (same rounded stats, same observed/expected strings), including the
     sub-k-row NULL and the single-token entropy-0 edge cases."""
     from pyspark.sql import functions as F
@@ -382,11 +383,22 @@ def test_degeneracy_fused_equals_two_standalone_passes(spark):
         df, id_col="doc_id", k=cfg.degen_kgram_k, max_dup_frac=0.2,
         carry_cols=("partition_id",),
     )
-    expected = degeneracy._rows(
+
+    def rows(stats, cond, facet, observed, expected):
+        flagged = stats.where(F.coalesce(cond, F.lit(False)))
+        return flagged.select(
+            "partition_id",
+            "doc_id",
+            F.lit(degeneracy.CHECK).alias("check_name"),
+            F.concat(F.lit(f"{facet}: "), observed.cast("string")).alias("observed"),
+            F.lit(expected).alias("expected"),
+        )
+
+    expected = rows(
         ent, F.col("low_entropy"), "low_entropy", F.col("entropy"),
         f"token unigram entropy >= {cfg.min_entropy}",
     ).unionByName(
-        degeneracy._rows(
+        rows(
             rep, F.col("repetitive"), "repetitive", F.col("dup_kgram_frac"),
             f"duplicated {cfg.degen_kgram_k}-gram fraction <= "
             f"{cfg.max_dup_kgram_frac}",

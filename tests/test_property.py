@@ -308,6 +308,19 @@ def test_token_kgram_repetition_matches_tuple_sets(spark, arrs, k):
         r = got[i]
         assert r.n_kgrams == len(wins) and r.n_distinct_kgrams == len(set(wins))
         assert r.dup_kgram_frac == frac, (i, a, k)
+    # the fused pass equals both standalone ops row for row; batches mix
+    # long and short rows, so the k-gram kernel's masked path runs and
+    # rows shorter than k carry NULL k-gram stats
+    ent = {r.doc_id: r for r in textqc.token_entropy(df).collect()}
+    fused = {r.doc_id: r for r in textqc.token_degen_stats(df, k=k).collect()}
+    assert fused.keys() == ent.keys()
+    for i, r in fused.items():
+        e, g = ent[i], got.get(i)
+        assert (r.n_tok, r.n_distinct, r.entropy, r.distinct_ratio) == (
+            e.n_tok, e.n_distinct, e.entropy, e.distinct_ratio
+        )
+        want = (g.n_kgrams, g.n_distinct_kgrams, g.dup_kgram_frac) if g else (None,) * 3
+        assert (r.n_kgrams, r.n_distinct_kgrams, r.dup_kgram_frac) == want, (i, arrs[i], k)
 
 
 ent_rows = st.lists(

@@ -661,6 +661,36 @@ def test_token_contamination_flags(spark):
     assert got_p.contaminated is False
 
 
+def test_bloom_prefilter_keeps_every_key():
+    """Spark-free: every key of a 200k-key set probes present in its own
+    Bloom bitmap. The gates trust a miss as definitive, so one dropped
+    bit is a silent false negative."""
+    import numpy as np
+
+    from tokenqc.textops import textqc
+
+    keys = np.random.default_rng(7).integers(
+        -(2**63), 2**63 - 1, size=200_000, dtype=np.int64
+    )
+    assert textqc._bloom(keys)(keys).all()
+
+
+def test_token_contamination_flags_train_equals_bench(spark):
+    """train == bench: every window is a benchmark shingle, so every row
+    reports n_contaminated == n_shingles. ~200k distinct windows make
+    many keys share a bitmap byte."""
+    import numpy as np
+
+    from tokenqc.textops import textqc
+
+    rng = np.random.default_rng(11)
+    rows = [(i, rng.integers(0, 50_000, size=108).tolist()) for i in range(2_000)]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    got = textqc.token_contamination_flags(df, df, k=8).collect()
+    assert len(got) == 2_000
+    assert all(r.n_contaminated == r.n_shingles == 101 for r in got)
+
+
 def test_cluster_representatives(spark):
     labels = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20)],

@@ -8,32 +8,29 @@ padding floods, single-token spam) and "does it tile?" (boilerplate
 loops, decoding stutter — healthy entropy, duplicated k-grams).
 
 Both statistics are within-row, so they cannot ride the fused JVM row
-scan (they need the Arrow stage). The fusion question was re-measured
-each round as the Arrow formulation changed:
+scan (they need the Arrow stage). Every config runs ONE
+`textqc._token_pass` whose kernel list holds one kernel per enabled
+facet — the same entropy / k-gram kernels as the oracle-verified
+standalone extras (seq_token_entropy / seq_token_kgram_rep), so all of
+them emit identical statistics — and the violation rows come from one
+JVM-side projection over the rounded values. Two measured conditions
+keep this design the fast one:
 
-- r5 (mapInPandas, per-row object arrays): one fused pass computing
-  both was 5.3 s vs 4.0 s for two independent passes at sf0.01 — the
-  doubled per-worker OBJECT working set cost more than the saved
-  transfer; two passes shipped.
-- r6 (mapInArrow over the raw list buffers, textqc.token_degen_stats):
-  the verdict FLIPS — the working set is two flat int64 arrays and the
-  saved second scan + Arrow transfer dominates, but ONLY with the
-  no-copy fast path for all-rows->=k batches: the first fused cut
-  masked the payload per batch (flat[np.repeat(ok, sizes)]) and
-  measured 11.6 s vs 7.8 s for the two unioned passes (interleaved
-  min-of-6, sf0.1 noop — the union overlaps both Arrow stages in one
-  128-task job, so it is NOT the sum of the standalone walls); with
-  the copy skipped the fused pass measured 7.3 s vs 9.1 s
-  (interleaved min-of-8). Fused ships for the both-facets case; the
-  single-facet configs still run exactly the one standalone op.
-
-The standalone operators remain the oracle-verified extras
-(seq_token_entropy / seq_token_kgram_rep); the fused pass shares their
-formulas via textqc and its violation rows are built JVM-side from the
-same rounded values, so all three emit identical statistics. Like the
-token lints, each facet is opt-in via config: `min_entropy` /
-`max_dup_kgram_frac` of None disables it (and its work) even when
-"degenerate" is listed in checks.
+- Fusing both facets into one pass wins only while the k-gram kernel
+  hashes the payload in place whenever every row of a batch has >= k
+  tokens. With a per-batch mask copy (flat[np.repeat(ok, sizes)]) the
+  fused pass measured 11.6 s against 7.8 s for two unioned standalone
+  passes; without the copy, 7.3 s against 9.1 s (interleaved, sf0.1
+  noop sink; the union overlaps both Arrow stages in one job, so it is
+  NOT the sum of the standalone walls). A fused mapInPandas pass lost
+  (5.3 s vs 4.0 s at sf0.01) to a doubled per-worker object working
+  set the Arrow-buffer kernels no longer have.
+- A disabled facet costs nothing: its kernel is not listed, its
+  columns never cross Arrow, and with the entropy facet off the pass
+  drops rows shorter than k before the scan leaves the JVM. Each facet
+  is opt-in via config — `min_entropy` / `max_dup_kgram_frac` of None
+  disables it even when "degenerate" is listed in checks; with neither
+  set no Arrow job runs at all.
 """
 
 from __future__ import annotations
@@ -51,14 +48,17 @@ _EMPTY = (
 )
 
 
-def _rows(stats: DataFrame, cond, facet: str, observed, expected: str) -> DataFrame:
-    flagged = stats.where(F.coalesce(cond, F.lit(False)))
-    return flagged.select(
-        "partition_id",
-        "doc_id",
-        F.lit(CHECK).alias("check_name"),
-        F.concat(F.lit(f"{facet}: "), observed.cast("string")).alias("observed"),
-        F.lit(expected).alias("expected"),
+def _flag(cond, facet: str, stat: str, expected: str):
+    """(observed, expected) struct for rows where `cond` holds, else
+    NULL (array_compact drops it); NULL stats never flag."""
+    return F.when(
+        F.coalesce(cond, F.lit(False)),
+        F.struct(
+            F.concat(F.lit(f"{facet}: "), F.col(stat).cast("string")).alias(
+                "observed"
+            ),
+            F.lit(expected).alias("expected"),
+        ),
     )
 
 
@@ -66,95 +66,41 @@ def violations(df: DataFrame, cfg: cb.CheckConfig) -> DataFrame:
     """Violation rows for the enabled degeneracy facets, in the
     engine's standard (partition_id, doc_id, check_name, observed,
     expected) shape. `df` must carry partition_id (the runner attaches
-    it). Both facets enabled -> ONE fused zero-shuffle Arrow pass
-    (textqc.token_degen_stats; the corpus is read once); a single
-    enabled facet runs exactly its standalone op; a disabled facet
-    costs nothing (measurement history in the module docstring).
+    it). The enabled facets' kernels run in ONE zero-shuffle Arrow pass
+    (the corpus is read once); a disabled facet costs nothing
+    (measurements in the module docstring).
     """
     from tokenqc.textops import textqc
 
-    if cfg.min_entropy is not None and cfg.max_dup_kgram_frac is not None:
-        stats = textqc.token_degen_stats(
-            df,
-            id_col="doc_id",
-            k=cfg.degen_kgram_k,
-            carry_cols=("partition_id",),
-        )
-        min_ent = float(cfg.min_entropy)
-        max_frac = float(cfg.max_dup_kgram_frac)
-        ent_row = F.when(
-            F.coalesce(F.col("entropy") < min_ent, F.lit(False)),
-            F.struct(
-                F.concat(
-                    F.lit("low_entropy: "), F.col("entropy").cast("string")
-                ).alias("observed"),
-                F.lit(f"token unigram entropy >= {cfg.min_entropy}").alias(
-                    "expected"
-                ),
-            ),
-        )
-        rep_row = F.when(
-            F.coalesce(F.col("dup_kgram_frac") > max_frac, F.lit(False)),
-            F.struct(
-                F.concat(
-                    F.lit("repetitive: "), F.col("dup_kgram_frac").cast("string")
-                ).alias("observed"),
-                F.lit(
-                    f"duplicated {cfg.degen_kgram_k}-gram fraction <= "
-                    f"{cfg.max_dup_kgram_frac}"
-                ).alias("expected"),
-            ),
-        )
-        return stats.select(
-            "partition_id",
-            "doc_id",
-            F.explode(F.array_compact(F.array(ent_row, rep_row))).alias("_v"),
-        ).select(
-            "partition_id",
-            "doc_id",
-            F.lit(CHECK).alias("check_name"),
-            F.col("_v.observed").alias("observed"),
-            F.col("_v.expected").alias("expected"),
-        )
-
-    parts: list[DataFrame] = []
+    k = cfg.degen_kgram_k
+    kernels, flags = [], []
     if cfg.min_entropy is not None:
-        ent = textqc.token_entropy(
-            df,
-            id_col="doc_id",
-            min_entropy=float(cfg.min_entropy),
-            carry_cols=("partition_id",),
-        )
-        parts.append(
-            _rows(
-                ent,
-                F.col("low_entropy"),
-                "low_entropy",
-                F.col("entropy"),
-                f"token unigram entropy >= {cfg.min_entropy}",
-            )
-        )
+        kernels.append(textqc._entropy_kernel())
+        flags.append(_flag(
+            F.col("entropy") < float(cfg.min_entropy), "low_entropy", "entropy",
+            f"token unigram entropy >= {cfg.min_entropy}",
+        ))
     if cfg.max_dup_kgram_frac is not None:
-        rep = textqc.token_kgram_repetition(
-            df,
-            id_col="doc_id",
-            k=cfg.degen_kgram_k,
-            max_dup_frac=float(cfg.max_dup_kgram_frac),
-            carry_cols=("partition_id",),
-        )
-        parts.append(
-            _rows(
-                rep,
-                F.col("repetitive"),
-                "repetitive",
-                F.col("dup_kgram_frac"),
-                f"duplicated {cfg.degen_kgram_k}-gram fraction <= "
-                f"{cfg.max_dup_kgram_frac}",
-            )
-        )
-    if not parts:
+        kernels.append(textqc._kgram_kernel(k))
+        flags.append(_flag(
+            F.col("dup_kgram_frac") > float(cfg.max_dup_kgram_frac),
+            "repetitive", "dup_kgram_frac",
+            f"duplicated {k}-gram fraction <= {cfg.max_dup_kgram_frac}",
+        ))
+    if not kernels:
         return df.sparkSession.createDataFrame([], _EMPTY)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    stats = textqc._token_pass(
+        df, "doc_id", "tokens", kernels, carry_cols=("partition_id",),
+        min_len=1 if cfg.min_entropy is not None else k,
+    )
+    return stats.select(
+        "partition_id",
+        "doc_id",
+        F.explode(F.array_compact(F.array(*flags))).alias("_v"),
+    ).select(
+        "partition_id",
+        "doc_id",
+        F.lit(CHECK).alias("check_name"),
+        F.col("_v.observed").alias("observed"),
+        F.col("_v.expected").alias("expected"),
+    )

@@ -655,7 +655,7 @@ def _dup_window_rows(
     rows for every k-gram window whose 64-bit window hash occurs in
     >= `min_docs` distinct documents.
 
-    Window hashing runs in ONE Arrow mapInArrow stage (the textqc
+    Window hashing runs in ONE `textqc._token_pass` Arrow stage (the
     shifted multiply-accumulate over the list column's flat values
     buffer, zero copies) — NOT the JVM `transform(sequence, p ->
     xxhash64(slice(toks, p, k)))` formulation: higher-order functions
@@ -680,43 +680,22 @@ def _dup_window_rows(
 
     from tokenqc.textops.textqc import (
         _flat_window_hashes,
-        _list_flat,
+        _n_tok_kernel,
         _shingle_powers,
+        _token_pass,
     )
 
     powers = _shingle_powers(k)
 
-    def hash_op(it):
-        for batch in it:
-            if not batch.num_rows:
-                continue
-            flat, offs = _list_flat(batch.column(1))
-            lens = np.diff(offs)
-            h, n_sh, _ = _flat_window_hashes(
-                flat.astype(np.uint64, copy=False), lens, k, powers
-            )
-            h_offs = np.concatenate(([0], np.cumsum(n_sh)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.array(lens.astype(np.int32)),
-                    pa.ListArray.from_arrays(
-                        pa.array(h_offs.astype(np.int32)), pa.array(h)
-                    ),
-                ],
-                names=[id_col, "n_tok", "_hs"],
-            )
-
-    toks = F.col(tokens_col)
-    dtypes = dict(df.dtypes)
-    hashed = (
-        df.where(toks.isNotNull() & (F.size(toks) >= k))
-        .select(id_col, tokens_col)
-        .mapInArrow(
-            hash_op,
-            schema=f"{id_col} {dtypes[id_col]}, n_tok int, _hs array<bigint>",
+    def window_hashes(flat, offs):
+        h, _, sh_offs = _flat_window_hashes(
+            flat.astype(np.uint64, copy=False), np.diff(offs), k, powers
         )
-    )
+        h_offs = np.append(sh_offs, h.size).astype(np.int32)
+        return [pa.ListArray.from_arrays(pa.array(h_offs), pa.array(h))]
+
+    kernels = [_n_tok_kernel(), ({"_hs": "array<bigint>"}, lambda: window_hashes)]
+    hashed = _token_pass(df, id_col, tokens_col, kernels, min_len=k)
     wins = hashed.select(id_col, "n_tok", F.posexplode("_hs").alias("p", "h"))
     if min_docs == 2:
         duph = (
@@ -953,9 +932,9 @@ def winnow_fingerprints(
     that any shared run of >= w + k - 1 tokens yields at least one
     shared fingerprint in both documents.
 
-    Scale shape: ONE Arrow mapInArrow stage over a slim (id, tokens)
-    projection — each batch's token column is consumed as the raw Arrow
-    buffers (flat values + offsets, zero copies — guide §4.2), window
+    Scale shape: ONE `textqc._token_pass` Arrow stage — each batch's
+    token column is consumed as the raw Arrow buffers (flat values +
+    offsets, zero copies), window
     hashes come from k shifted multiply-accumulate passes mod P (O(n)
     memory, exact), the winnow minimum from an O(n) block prefix/suffix
     pass (never an (n, w) view), per-row dedup from per-row segment
@@ -981,74 +960,35 @@ def winnow_fingerprints(
     import numpy as np
     import pyarrow as pa
 
+    from tokenqc.textops.textqc import _seg_distinct, _token_pass, _window_starts
+
     if k < 1 or w < 1:
         raise ValueError("k and w must be >= 1")
     if not (1 < mod_p <= (1 << 31)):
         raise ValueError("mod_p must fit 31 bits")
     powers = _winnow_powers(k, mod_p)
-    min_len = k + w - 1
 
-    def winnow_op(it):
-        from tokenqc.textops.textqc import _list_flat, _sort_segments
+    def fingerprints(flat, offs):
+        flat = flat.astype(np.uint64, copy=False)
+        n_win = flat.size - (k - 1)
+        h_flat = np.zeros(n_win, dtype=np.uint64)
+        for j in range(k):
+            h_flat = (h_flat + flat[j : j + n_win] * powers[j]) % mod_p
+        starts, n_sh, _ = _window_starts(np.diff(offs), k)
+        # winnow: min over each run of w consecutive same-row hashes —
+        # the same-row runs are the length-w windows over rows of n_sh
+        w_starts, _, w_offs = _window_starts(n_sh, w)
+        sel = _sliding_min(h_flat[starts].view(np.int64), w)[w_starts]
+        keep, cnt = _seg_distinct(sel, np.append(w_offs, sel.size))
+        # ONE fps ARRAY row per doc — the id explodes JVM-side:
+        # emitting pre-exploded (id, fp) rows repeated the string id
+        # per fingerprint through Arrow (~2.5x the bytes; measured a
+        # 1.75x operator regression before this was reverted)
+        f_offs = np.append(0, np.cumsum(cnt)).astype(np.int32)
+        return [pa.ListArray.from_arrays(pa.array(f_offs), pa.array(sel[keep]))]
 
-        for batch in it:
-            if not batch.num_rows:
-                continue
-            flat, l_offs = _list_flat(batch.column(1))
-            flat = flat.astype(np.uint64, copy=False)
-            lens = np.diff(l_offs)
-            n_win = flat.size - (k - 1)
-            h_flat = np.zeros(n_win, dtype=np.uint64)
-            for j in range(k):
-                h_flat = (h_flat + flat[j : j + n_win] * powers[j]) % mod_p
-            # per-row valid hash windows (drop row-straddling starts)
-            n_sh = lens - (k - 1)
-            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            sh_offs = np.cumsum(n_sh) - n_sh
-            row_of = np.repeat(np.arange(lens.size), n_sh)
-            pos = np.arange(int(n_sh.sum())) - sh_offs[row_of]
-            hv = h_flat[offs[row_of] + pos].view(np.int64)
-            # winnow: min over each window of w consecutive same-row hashes
-            smin = _sliding_min(hv, w)
-            nwf = smin.size
-            valid = pos[:nwf] <= (n_sh[row_of[:nwf]] - w)
-            sel = smin[valid]
-            # distinct (row, fp) via per-row segment sorts + one
-            # adjacent-eq pass (textqc._sort_segments — measured ~18x
-            # over the global lexsort this replaced); rows stay
-            # contiguous under the valid mask, with n_sh - w + 1
-            # winnow positions each
-            cnt_w = n_sh - (w - 1)
-            wb = np.concatenate(([0], np.cumsum(cnt_w)))
-            _sort_segments(sel, wb)
-            eq = np.zeros(sel.size, dtype=bool)
-            eq[1:] = sel[1:] == sel[:-1]
-            eq[wb[1:-1]] = False
-            keep = ~eq
-            s = sel[keep]
-            # ONE fps ARRAY row per doc — the id explodes JVM-side:
-            # emitting pre-exploded (id, fp) rows repeated the string id
-            # per fingerprint through Arrow (~2.5x the bytes; measured a
-            # 1.75x operator regression before this was reverted)
-            cnt = np.add.reduceat(keep, wb[:-1])
-            f_offs = np.concatenate(([0], np.cumsum(cnt)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.ListArray.from_arrays(
-                        pa.array(f_offs.astype(np.int32)), pa.array(s)
-                    ),
-                ],
-                names=[id_col, "fps"],
-            )
-
-    dtypes = dict(df.dtypes)
-    toks = F.col(tokens_col)
-    out = (
-        df.where(toks.isNotNull() & (F.size(toks) >= min_len))
-        .select(id_col, tokens_col)
-        .mapInArrow(winnow_op, schema=f"{id_col} {dtypes[id_col]}, fps array<bigint>")
-    )
+    kernel = {"fps": "array<bigint>"}, lambda: fingerprints
+    out = _token_pass(df, id_col, tokens_col, [kernel], min_len=k + w - 1)
     return out.select(id_col, F.explode("fps").alias("fp"))
 
 

@@ -845,16 +845,158 @@ def _list_flat(arr):
     return v[lo : int(offs[-1])], offs.astype(np.int64) - lo
 
 
-def _sort_segments(a, bounds) -> None:
-    """In-place ascending sort of each contiguous segment
-    a[bounds[i]:bounds[i+1]]. Replaces the global np.lexsort((a, row_of))
-    the per-row run-length passes used: segments are already contiguous
-    in row order, so per-segment quicksort does sum(n_i log n_i) work
-    with no stable-argsort indirection — measured 18x faster at 5M
+def _seg_distinct(a, bounds):
+    """Sort each non-empty segment a[bounds[i]:bounds[i+1]] in place and
+    mark the first element of every run of equal values. Returns
+    (first, n_distinct per segment): the per-row distinct count behind
+    entropy, k-gram repetition and winnow dedup. Per-segment quicksort
+    does sum(n_i log n_i) work with no stable-argsort indirection —
+    measured 18x faster than a global np.lexsort((a, row_of)) at 5M
     elements / 10k rows per batch (0.09 s vs 1.69 s); the Python loop
     costs ~1 µs per segment."""
+    import numpy as np
+
     for i in range(bounds.size - 1):
         a[bounds[i] : bounds[i + 1]].sort()
+    first = np.ones(a.size, dtype=bool)
+    first[1:] = a[1:] != a[:-1]
+    first[bounds[:-1]] = True  # a segment start always starts a run
+    return first, np.add.reduceat(first, bounds[:-1])
+
+
+def _r6(x):
+    """Round non-negative `x` to 6 decimals half away from zero and turn
+    -0.0 (from -1*log(1)) into +0.0: np.round is half-to-even (1/640 ->
+    0.001562 vs every SQL engine's 0.001563), and sums of <=1e3 float64
+    terms agree across engines to ~1e-12, so 6dp is portable."""
+    import numpy as np
+
+    return np.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _token_pass(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str,
+    kernels,
+    carry_cols: Iterable[str] = (),
+    min_len: int = 1,
+) -> DataFrame:
+    """The one Arrow stage of every per-row token-payload statistic: the
+    rows whose token array is non-null with >= `min_len` tokens cross to
+    Python once as a slim (id, carry..., tokens) projection, one output
+    row per input row, ZERO shuffles. Each batch's token column is
+    consumed as the raw Arrow buffers — one flat values array + offsets,
+    zero copies (`_list_flat`) — and every kernel maps
+    (flat, offs) to its own output columns; id and carry columns pass
+    through untouched.
+
+    `kernels` is a list of (fields, make) pairs: `fields` maps each
+    output column the kernel returns to its Spark type, and `make()`
+    runs once per task and returns `run(flat, offs) -> [column, ...]`
+    (numpy or pyarrow arrays in `fields` order), so per-task state — a
+    broadcast lookup table, a Bloom bitmap — is built once per task, not
+    once per batch. Fusing statistics is listing their kernels: the
+    corpus is scanned and crosses Arrow once for all of them.
+
+    Output: (id, carry..., every kernel's fields in list order)."""
+    import pyarrow as pa
+
+    keep = [id_col, *carry_cols]
+    fields = [f for kernel_fields, _ in kernels for f in kernel_fields.items()]
+    dtypes = dict(df.dtypes)
+    schema = ", ".join(
+        [f"{c} {dtypes[c]}" for c in keep] + [f"{n} {t}" for n, t in fields]
+    )
+    names = keep + [n for n, _ in fields]
+
+    def token_op(it):
+        runs = [make() for _, make in kernels]
+        for batch in it:
+            if not batch.num_rows:
+                continue
+            flat, offs = _list_flat(batch.column(len(keep)))
+            cols = [c for run in runs for c in run(flat, offs)]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns[: len(keep)] + [pa.array(c) for c in cols],
+                names=names,
+            )
+
+    toks = F.col(tokens_col)
+    return (
+        df.where(toks.isNotNull() & (F.size(toks) >= min_len))
+        .select(*keep, tokens_col)
+        .mapInArrow(token_op, schema=schema)
+    )
+
+
+def _n_tok_kernel():
+    """`_token_pass` kernel: tokens per row, (n_tok)."""
+    import numpy as np
+
+    def run(flat, offs):
+        return [np.diff(offs).astype(np.int32)]
+
+    return {"n_tok": "int"}, lambda: run
+
+
+def _entropy_kernel():
+    """`_token_pass` kernel: per-row token unigram entropy in nats,
+    (n_distinct, entropy, distinct_ratio); rows must be non-empty. The
+    per-row distributions come from `_seg_distinct` over a copy of the
+    payload — no per-row Python allocation at all."""
+    import numpy as np
+
+    def run(flat, offs):
+        sizes = np.diff(offs)
+        s = flat.astype(np.int64)  # writable copy off the Arrow buffer
+        first, ndist = _seg_distinct(s, offs)
+        counts = np.diff(np.append(np.flatnonzero(first), s.size))
+        p = counts / np.repeat(sizes, ndist)
+        ent = np.add.reduceat(-p * np.log(p), np.cumsum(ndist) - ndist)
+        return [ndist.astype(np.int32), _r6(ent), _r6(ndist / sizes)]
+
+    fields = {"n_distinct": "int", "entropy": "double", "distinct_ratio": "double"}
+    return fields, lambda: run
+
+
+def _kgram_kernel(k: int):
+    """`_token_pass` kernel: per-row duplicated k-gram fraction,
+    (n_kgrams, n_distinct_kgrams, dup_kgram_frac) — all NULL on rows
+    shorter than k, where no window exists. Window hashes come from
+    `_flat_window_hashes`; distinctness is over the 64-bit hash."""
+    import numpy as np
+    import pyarrow as pa
+
+    powers = _shingle_powers(k)
+
+    def run(flat, offs):
+        sizes = np.diff(offs)
+        ok = sizes >= k
+        n_kg = np.zeros(sizes.size, dtype=np.int64)
+        n_dist = np.zeros(sizes.size, dtype=np.int64)
+        frac = np.zeros(sizes.size)
+        if ok.any():
+            # when every row has a window the payload is hashed in place;
+            # masking copies it, which cost the fused degeneracy pass
+            # more than a second scan (checks/degeneracy.py)
+            if ok.all():
+                flat_ok, lens_ok = flat.astype(np.uint64, copy=False), sizes
+            else:
+                flat_ok = flat[np.repeat(ok, sizes)].astype(np.uint64)
+                lens_ok = sizes[ok]
+            h, n_sh, sh_offs = _flat_window_hashes(flat_ok, lens_ok, k, powers)
+            _, nd = _seg_distinct(h, np.append(sh_offs, h.size))
+            n_kg[ok], n_dist[ok], frac[ok] = n_sh, nd, 1.0 - nd / n_sh
+        null = ~ok
+        return [
+            pa.array(n_kg.astype(np.int32), mask=null),
+            pa.array(n_dist.astype(np.int32), mask=null),
+            pa.array(_r6(frac), mask=null),
+        ]
+
+    fields = {"n_kgrams": "int", "n_distinct_kgrams": "int", "dup_kgram_frac": "double"}
+    return fields, lambda: run
 
 
 def token_entropy(
@@ -873,79 +1015,21 @@ def token_entropy(
     /root/reference/bin/analyze_joss.py:199-266 re-expressed over the
     payload).
 
-    Scale shape: one Arrow mapInArrow stage over a slim (id, tokens)
-    projection, ONE output row per input row, ZERO shuffles — entropy is
-    a within-row statistic, so unlike unigram_logprob no corpus-wide
-    model or explode is needed. Each batch's token column is consumed
-    as the raw Arrow buffers — one flat values array + offsets, zero
-    copies (guide §4.2) — and the per-row distributions come from
-    per-row segment sorts (`_sort_segments`) plus one adjacent-equality
-    run-length pass (no per-row Python allocation at all).
+    Scale shape: one `_token_pass` Arrow stage, ONE output row per input
+    row, ZERO shuffles — entropy is a within-row statistic, so unlike
+    unigram_logprob no corpus-wide model or explode is needed. The
+    per-row distributions come from per-row segment sorts plus one
+    adjacent-equality run-length pass (`_entropy_kernel`).
     Empty/null-token rows are excluded (completeness violations
     upstream).
 
     Output: (id, carry..., n_tok, n_distinct, entropy, distinct_ratio,
-    low_entropy). Entropy/ratio round to 6 decimals: sums of <=1e3
-    float64 terms agree across engines to ~1e-12. `carry_cols` pass
-    through the Arrow stage untouched (the engine carries partition_id
-    for its violation rows).
+    low_entropy). Entropy/ratio round to 6 decimals (`_r6`). `carry_cols`
+    pass through the Arrow stage untouched (the engine carries
+    partition_id for its violation rows).
     """
-    import numpy as np
-    import pyarrow as pa
-
-    carry_cols = list(carry_cols)
-    tok_idx = 1 + len(carry_cols)
-
-    def ent_op(it):
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            flat, offs = _list_flat(batch.column(tok_idx))
-            sizes = np.diff(offs)
-            # per-row in-place sorts (_sort_segments) + one adjacent-eq
-            # run-length pass over the sorted stream
-            s = flat.astype(np.int64)  # writable copy off the Arrow buffer
-            _sort_segments(s, offs)
-            eq = np.zeros(s.size, dtype=bool)
-            eq[1:] = s[1:] == s[:-1]
-            eq[offs[1:-1]] = False  # a row boundary always starts a run
-            starts = np.flatnonzero(~eq)
-            counts = np.diff(np.append(starts, s.size))
-            grp_row = np.searchsorted(offs, starts, side="right") - 1
-            p = counts / sizes[grp_row]
-            terms = -p * np.log(p)
-            row_starts = np.flatnonzero(np.r_[True, grp_row[1:] != grp_row[:-1]])
-            ent = np.add.reduceat(terms, row_starts)
-            ndist = np.diff(np.append(row_starts, grp_row.shape[0]))
-            # half-away-from-zero on non-negative values (np.round is
-            # half-to-even: 1/640 -> 0.001562 vs every SQL engine's
-            # 0.001563) and +0.0 (np keeps -0.0 from -1*log(1))
-            r6 = lambda x: np.floor(x * 1e6 + 0.5) / 1e6
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(tok_idx)]
-                + [
-                    pa.array(sizes.astype(np.int32)),
-                    pa.array(ndist.astype(np.int32)),
-                    pa.array(r6(ent)),
-                    pa.array(r6(ndist / sizes)),
-                ],
-                names=[id_col, *carry_cols, "n_tok", "n_distinct",
-                       "entropy", "distinct_ratio"],
-            )
-
-    dtypes = dict(df.dtypes)
-    carry_schema = "".join(f", {c} {dtypes[c]}" for c in carry_cols)
-    out = (
-        df.where(F.col(tokens_col).isNotNull() & (F.size(tokens_col) > 0))
-        .select(id_col, *carry_cols, tokens_col)
-        .mapInArrow(
-            ent_op,
-            schema=(
-                f"{id_col} {dtypes[id_col]}{carry_schema}, n_tok int, "
-                "n_distinct int, entropy double, distinct_ratio double"
-            ),
-        )
+    out = _token_pass(
+        df, id_col, tokens_col, [_n_tok_kernel(), _entropy_kernel()], carry_cols
     )
     return out.withColumn("low_entropy", F.col("entropy") < F.lit(float(min_entropy)))
 
@@ -966,16 +1050,13 @@ def token_kgram_repetition(
     even when its unigram entropy looks healthy — a 4-token cycle
     repeated 100× has entropy ln(4) but dup_kgram_frac → 1.
 
-    Scale shape: ONE Arrow mapInArrow stage over a slim (id, tokens)
-    projection, one output row per input row, ZERO shuffles (the
-    statistic is within-row, plan-pinned). Each batch's token column is
-    consumed as the raw Arrow buffers — one flat values array + offsets,
-    zero copies (guide §4.2); every k-window 64-bit polynomial hash
-    comes from the k shifted multiply-accumulate passes of
-    `_flat_window_hashes` (O(n) extra memory), and per-row distinct
-    counts from per-row segment sorts + one run-length pass — no
-    per-row Python allocation. Distinctness is over the 64-bit window
-    hash: a row with
+    Scale shape: ONE `_token_pass` Arrow stage, one output row per input
+    row, ZERO shuffles (the statistic is within-row, plan-pinned). Every
+    k-window 64-bit polynomial hash comes from the k shifted
+    multiply-accumulate passes of `_flat_window_hashes` (O(n) extra
+    memory), and per-row distinct counts from per-row segment sorts +
+    one run-length pass — no per-row Python allocation. Distinctness is
+    over the 64-bit window hash: a row with
     w windows has collision odds ~w²/2^65 (a 10k-token doc: ~3e-12),
     documented rather than paid for with exact window comparison. Rows
     with fewer than k tokens are excluded — no window exists
@@ -986,60 +1067,11 @@ def token_kgram_repetition(
     half-away-from-zero (the token_entropy cross-engine portability
     rule); `carry_cols` pass through the Arrow stage untouched.
     """
-    import numpy as np
-    import pyarrow as pa
-
     if k < 1:
         raise ValueError("k must be >= 1")
-    carry_cols = list(carry_cols)
-    powers = _shingle_powers(k)
-    tok_idx = 1 + len(carry_cols)
-
-    def rep_op(it):
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            flat, offs = _list_flat(batch.column(tok_idx))
-            sizes = np.diff(offs)
-            h, n_sh, sh_offs = _flat_window_hashes(
-                flat.astype(np.uint64, copy=False), sizes, k, powers
-            )
-            # per-row segment sorts + adjacent-eq run starts: distinct
-            # window hashes per row without a global lexsort
-            bounds = np.append(sh_offs, h.size)
-            _sort_segments(h, bounds)
-            eq = np.zeros(h.size, dtype=bool)
-            eq[1:] = h[1:] == h[:-1]
-            eq[sh_offs[1:]] = False  # a row boundary always starts a run
-            ndist = np.add.reduceat(~eq, sh_offs)
-            frac = 1.0 - ndist / n_sh
-            r6 = lambda x: np.floor(x * 1e6 + 0.5) / 1e6
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(tok_idx)]
-                + [
-                    pa.array(sizes.astype(np.int32)),
-                    pa.array(n_sh.astype(np.int32)),
-                    pa.array(ndist.astype(np.int32)),
-                    pa.array(r6(frac)),
-                ],
-                names=[id_col, *carry_cols, "n_tok", "n_kgrams",
-                       "n_distinct_kgrams", "dup_kgram_frac"],
-            )
-
-    dtypes = dict(df.dtypes)
-    carry_schema = "".join(f", {c} {dtypes[c]}" for c in carry_cols)
-    toks = F.col(tokens_col)
-    out = (
-        df.where(toks.isNotNull() & (F.size(toks) >= k))
-        .select(id_col, *carry_cols, tokens_col)
-        .mapInArrow(
-            rep_op,
-            schema=(
-                f"{id_col} {dtypes[id_col]}{carry_schema}, n_tok int, "
-                "n_kgrams int, n_distinct_kgrams int, dup_kgram_frac double"
-            ),
-        )
+    out = _token_pass(
+        df, id_col, tokens_col, [_n_tok_kernel(), _kgram_kernel(k)], carry_cols,
+        min_len=k,
     )
     return out.withColumn(
         "repetitive", F.col("dup_kgram_frac") > F.lit(float(max_dup_frac))
@@ -1054,95 +1086,20 @@ def token_degen_stats(
     carry_cols: Iterable[str] = (),
 ) -> DataFrame:
     """Fused per-document degeneracy statistics — entropy AND duplicated
-    k-gram fraction from ONE Arrow pass over one scan, for callers that
-    need both (the engine's degenerate gate): the corpus is read once
-    and crosses Arrow once instead of twice. Same math, rounding and
-    row domains as `token_entropy` / `token_kgram_repetition`: every
-    row with >= 1 token gets entropy; rows shorter than k get a NULL
-    dup_kgram_frac (no window exists).
+    k-gram fraction from ONE Arrow pass over one scan: the
+    `token_entropy` and `token_kgram_repetition` kernels listed in one
+    `_token_pass`, so the math, rounding and row domains are theirs:
+    every row with >= 1 token gets entropy; rows shorter than k get NULL
+    k-gram statistics (no window exists).
 
-    r5 measured a fused PANDAS pass slower than two passes (the
-    per-worker object working set doubled); with the Arrow-buffer
-    formulation the verdict flips — the working set is two flat int64
-    arrays, and the saved scan + transfer dominates (re-measured r6,
-    see checks/degeneracy.py).
-
-    Output: (id, carry..., n_tok int, entropy double,
-    dup_kgram_frac double nullable).
+    Output: (id, carry..., n_tok, n_distinct, entropy, distinct_ratio,
+    n_kgrams, n_distinct_kgrams, dup_kgram_frac), the k-gram columns
+    nullable.
     """
-    import numpy as np
-    import pyarrow as pa
-
     if k < 1:
         raise ValueError("k must be >= 1")
-    carry_cols = list(carry_cols)
-    powers = _shingle_powers(k)
-    tok_idx = 1 + len(carry_cols)
-
-    def degen_op(it):
-        r6 = lambda x: np.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            flat, offs = _list_flat(batch.column(tok_idx))
-            sizes = np.diff(offs)
-            # --- entropy half (token_entropy's exact pass) ---
-            s = flat.astype(np.int64)
-            _sort_segments(s, offs)
-            eq = np.zeros(s.size, dtype=bool)
-            eq[1:] = s[1:] == s[:-1]
-            eq[offs[1:-1]] = False
-            starts = np.flatnonzero(~eq)
-            counts = np.diff(np.append(starts, s.size))
-            grp_row = np.searchsorted(offs, starts, side="right") - 1
-            p = counts / sizes[grp_row]
-            terms = -p * np.log(p)
-            row_starts = np.flatnonzero(np.r_[True, grp_row[1:] != grp_row[:-1]])
-            ent = np.add.reduceat(terms, row_starts)
-            del s, eq, starts, counts, grp_row, p, terms
-            # --- k-gram half on the rows long enough for a window ---
-            ok = sizes >= k
-            frac = np.zeros(n, dtype=np.float64)
-            if ok.any():
-                if ok.all():  # common case: no mask copy of the payload
-                    flat_ok = flat.astype(np.uint64, copy=False)
-                    lens_ok = sizes
-                else:
-                    flat_ok = flat[np.repeat(ok, sizes)].astype(np.uint64)
-                    lens_ok = sizes[ok]
-                h, n_sh, sh_offs = _flat_window_hashes(flat_ok, lens_ok, k, powers)
-                bounds = np.append(sh_offs, h.size)
-                _sort_segments(h, bounds)
-                heq = np.zeros(h.size, dtype=bool)
-                heq[1:] = h[1:] == h[:-1]
-                heq[sh_offs[1:]] = False
-                ndist = np.add.reduceat(~heq, sh_offs)
-                frac[ok] = r6(1.0 - ndist / n_sh)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(tok_idx)]
-                + [
-                    pa.array(sizes.astype(np.int32)),
-                    pa.array(r6(ent)),
-                    pa.array(frac, mask=~ok),
-                ],
-                names=[id_col, *carry_cols, "n_tok", "entropy",
-                       "dup_kgram_frac"],
-            )
-
-    dtypes = dict(df.dtypes)
-    carry_schema = "".join(f", {c} {dtypes[c]}" for c in carry_cols)
-    return (
-        df.where(F.col(tokens_col).isNotNull() & (F.size(tokens_col) > 0))
-        .select(id_col, *carry_cols, tokens_col)
-        .mapInArrow(
-            degen_op,
-            schema=(
-                f"{id_col} {dtypes[id_col]}{carry_schema}, n_tok int, "
-                "entropy double, dup_kgram_frac double"
-            ),
-        )
-    )
+    kernels = [_n_tok_kernel(), _entropy_kernel(), _kgram_kernel(k)]
+    return _token_pass(df, id_col, tokens_col, kernels, carry_cols)
 
 
 def _shingle_powers(k: int):
@@ -1157,6 +1114,20 @@ def _shingle_powers(k: int):
         acc = (acc * b) & 0xFFFFFFFFFFFFFFFF  # mod 2^64
         pw.append(acc)
     return np.array(pw[::-1], dtype=np.uint64)
+
+
+def _window_starts(lens, k: int):
+    """Every length-k window that lies inside one row of the
+    concatenation of rows with lengths `lens` (each >= k), in row order:
+    returns (start index into the concatenation, windows per row, index
+    of each row's first window). Row r's windows sit (k-1)*r past their
+    dense index, the k-1 row-straddling starts each earlier row drops —
+    no per-row Python loop."""
+    import numpy as np
+
+    n_sh = lens - (k - 1)
+    row_of = np.repeat(np.arange(lens.size), n_sh)
+    return np.arange(row_of.size) + (k - 1) * row_of, n_sh, np.cumsum(n_sh) - n_sh
 
 
 def _flat_window_hashes(flat, lens, k: int, powers):
@@ -1175,23 +1146,8 @@ def _flat_window_hashes(flat, lens, k: int, powers):
     h_flat = np.zeros(n_win, dtype=np.uint64)
     for j in range(k):
         h_flat += flat[j : j + n_win] * powers[j]
-    h_flat = h_flat.view(np.int64)
-    n_sh = lens - (k - 1)  # >= 1: short rows filtered upstream
-    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    sh_offs = np.cumsum(n_sh) - n_sh
-    row_of = np.repeat(np.arange(lens.size), n_sh)
-    pos = np.arange(int(n_sh.sum())) - sh_offs[row_of]
-    return h_flat[offs[row_of] + pos], n_sh, sh_offs
-
-
-def _batch_window_hashes(arrs, k: int, powers):
-    """List-of-arrays wrapper over `_flat_window_hashes` (kept for
-    callers that hold per-row arrays rather than Arrow buffers)."""
-    import numpy as np
-
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
-    flat = np.concatenate(arrs).astype(np.uint64, copy=False)
-    return _flat_window_hashes(flat, lens, k, powers)
+    starts, n_sh, sh_offs = _window_starts(lens, k)
+    return h_flat.view(np.int64)[starts], n_sh, sh_offs
 
 
 def collect_benchmark_shingles(
@@ -1239,6 +1195,31 @@ def collect_benchmark_shingles(
     return np.sort(pdf["__h"].to_numpy(dtype=np.int64))
 
 
+def _bloom(keys):
+    """One-hash Bloom prefilter over int64 `keys` in a 2^27-bit (16 MB)
+    bitmap. Returns maybe(h) -> bool mask that is False only where h is
+    certainly not a key: every key's bit is set, so a miss is
+    definitive. The build is np.bitwise_or.at, not `bits[byte] |= bit`:
+    the buffered fancy-index form keeps only the last key's bit when
+    keys share a byte (~5% of 2M keys probed absent)."""
+    import numpy as np
+
+    mult = np.uint64(0x9E3779B97F4A7C15)
+
+    def slot(h):
+        b = (h.view(np.uint64) * mult) >> np.uint64(64 - 27)
+        return b >> np.uint64(3), np.uint8(1) << (b & np.uint64(7)).astype(np.uint8)
+
+    bits = np.zeros(1 << 24, dtype=np.uint8)
+    np.bitwise_or.at(bits, *slot(keys))
+
+    def maybe(h):
+        byte, bit = slot(h)
+        return (bits[byte] & bit) != 0
+
+    return maybe
+
+
 def flag_against_shingles(
     df: DataFrame, bench_arr, k: int = 8,
     id_col: str = "doc_id", tokens_col: str = "tokens", min_hits: int = 1,
@@ -1262,73 +1243,43 @@ def flag_against_shingles(
     the per-call copies accumulate until GC — the streaming gate does
     exactly this."""
     import numpy as np
-    import pyarrow as pa
 
     powers = _shingle_powers(k)
-    toks = F.col(tokens_col)
     bcast = (
         bench_arr
         if hasattr(bench_arr, "value")
         else df.sparkSession.sparkContext.broadcast(bench_arr)
     )
 
-    def train_op(it):
+    def make():
         ba = bcast.value
-        if ba.size:
-            # 2^27-bit one-hash Bloom prefilter over the bench set, built
-            # once per task (~5 ms/M keys): the binary search into the
-            # (up to 80 MB) sorted array is cache-hostile — ~log2(n)
-            # random misses per window — while the 16 MB bitmap is one
-            # probe; only the ~n_bench/2^27 false-positive fraction plus
-            # true hits pay the search. Exact: Bloom misses are
-            # definitive, hits are verified by the search (guide §3.2's
-            # pre-filter logic applied inside the worker). Measured
-            # 5-12x on the membership test at 0.6M-10M bench keys.
-            mult = np.uint64(0x9E3779B97F4A7C15)
-            bits = np.zeros(1 << 24, dtype=np.uint8)
-            bb = (ba.view(np.uint64) * mult) >> np.uint64(64 - 27)
-            bits[bb >> np.uint64(3)] |= np.uint8(1) << (bb & np.uint64(7)).astype(
-                np.uint8
-            )
-        for batch in it:
-            if not batch.num_rows:
-                continue
-            flat, offs = _list_flat(batch.column(1))
+        # `_bloom` prefilter over the bench set, built once per task: the
+        # binary search into the (up to 80 MB) sorted array is
+        # cache-hostile — ~log2(n) random misses per window — while the
+        # 16 MB bitmap is one probe; only the ~n_bench/2^27
+        # false-positive fraction plus true hits pay the search. Exact
+        # over the 64-bit window hashes: Bloom misses are definitive and
+        # hits are verified by the search. Measured 5-12x on the
+        # membership test at 0.6M-10M bench keys.
+        maybe = _bloom(ba) if ba.size else None
+
+        def run(flat, offs):
             h, n_sh, sh_offs = _flat_window_hashes(
                 flat.astype(np.uint64, copy=False), np.diff(offs), k, powers
             )
-            if ba.size:
-                hb = (h.view(np.uint64) * mult) >> np.uint64(64 - 27)
-                maybe = (
-                    bits[hb >> np.uint64(3)]
-                    & (np.uint8(1) << (hb & np.uint64(7)).astype(np.uint8))
-                ) != 0
-                sub = h[maybe]
+            hit = np.zeros(h.size, dtype=bool)
+            if maybe is not None:
+                m = maybe(h)
+                sub = h[m]
                 pos = np.searchsorted(ba, sub).clip(max=ba.size - 1)
-                hit = np.zeros(h.size, dtype=bool)
-                hit[maybe] = ba[pos] == sub
-            else:
-                hit = np.zeros(h.shape[0], dtype=bool)
+                hit[m] = ba[pos] == sub
             n_cont = np.add.reduceat(hit, sh_offs)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.array(n_sh.astype(np.int32)),
-                    pa.array(n_cont.astype(np.int32)),
-                ],
-                names=[id_col, "n_shingles", "n_contaminated"],
-            )
+            return [n_sh.astype(np.int32), n_cont.astype(np.int32)]
 
-    id_type = next(
-        f.dataType.simpleString() for f in df.schema.fields if f.name == id_col
-    )
-    out = (
-        df.where(toks.isNotNull() & (F.size(toks) >= k))
-        .select(id_col, tokens_col)
-        .mapInArrow(
-            train_op, schema=f"{id_col} {id_type}, n_shingles int, n_contaminated int"
-        )
-    )
+        return run
+
+    kernel = {"n_shingles": "int", "n_contaminated": "int"}, make
+    out = _token_pass(df, id_col, tokens_col, [kernel], min_len=k)
     return out.select(
         id_col,
         "n_shingles",
@@ -2035,42 +1986,28 @@ def remap_tokens(
     blut = sc.broadcast(lut)
     unk = int(unk_id)
 
-    def remap_op(it):
+    def make():
         table = blut.value
         n_lut = table.shape[0]
-        for batch in it:
-            if not batch.num_rows:
-                continue
-            # the list column's raw buffers: one gather over the flat
-            # values, then the output ListArray is rebuilt from the SAME
-            # offsets — no per-row ndarray, no np.split object array
-            # (guide §4.2: re-slice the buffer, don't copy rows)
-            flat, offs = _list_flat(batch.column(1))
+
+        def run(flat, offs):
+            # one gather over the flat values, then the output ListArray
+            # is rebuilt from the SAME offsets — no per-row ndarray, no
+            # np.split object array
             flat = flat.astype(np.int64, copy=False)
             ok = (flat >= 0) & (flat < n_lut)
             oov = flat if passthrough else np.int64(unk)
             out = np.where(ok, table[np.clip(flat, 0, n_lut - 1)], oov)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.ListArray.from_arrays(
-                        pa.array(offs.astype(np.int32)),
-                        pa.array(out.astype(np.int32)),
-                    ),
-                    pa.array(np.diff(offs).astype(np.int32)),
-                ],
-                names=[id_col, tokens_col, "n_tok"],
-            )
+            return [
+                pa.ListArray.from_arrays(
+                    pa.array(offs.astype(np.int32)), pa.array(out.astype(np.int32))
+                )
+            ]
 
-    dtypes = dict(df.dtypes)
-    return (
-        df.where(F.col(tokens_col).isNotNull())
-        .select(id_col, tokens_col)
-        .mapInArrow(
-            remap_op,
-            schema=f"{id_col} {dtypes[id_col]}, {tokens_col} array<int>, n_tok int",
-        )
-    )
+        return run
+
+    kernels = [({tokens_col: "array<int>"}, make), _n_tok_kernel()]
+    return _token_pass(df, id_col, tokens_col, kernels, min_len=0)
 
 
 def vocab_prune_plan(
