@@ -49,12 +49,9 @@ def test_write_batch_rows_atomic_and_clean(spark, tmp_path):
     next idempotent overwrite."""
     import os
 
-    import pyarrow as pa
-
     out = str(tmp_path)
     ddl = "k int, v string"
-    schema = [("k", pa.int32()), ("v", pa.string())]
-    path = qio.write_batch_rows(spark, [(1, "a"), (2, "b")], ddl, schema, out, "t", "r", 0)
+    path = qio.write_batch_rows(spark, [(1, "a"), (2, "b")], ddl, out, "t", "r", 0)
     files = os.listdir(path)
     assert files == ["part-00000.parquet"]
     assert qio.read_table(spark, out, "t", "r").count() == 2
@@ -64,7 +61,7 @@ def test_write_batch_rows_atomic_and_clean(spark, tmp_path):
         f.write(b"not parquet")
     assert qio.read_table(spark, out, "t", "r").count() == 2
     # idempotent retry replaces the slice and clears the temp
-    qio.write_batch_rows(spark, [(3, "c")], ddl, schema, out, "t", "r", 0)
+    qio.write_batch_rows(spark, [(3, "c")], ddl, out, "t", "r", 0)
     assert os.listdir(path) == ["part-00000.parquet"]
     assert qio.read_table(spark, out, "t", "r").count() == 1
 

@@ -319,30 +319,6 @@ def test_token_drift_missing_baseline_is_unknown(spark, tables, tmp_path):
     assert row.status == "UNKNOWN" and row.partition_id == -1
 
 
-def test_phase_detail_modes_equivalent(spark, tables, tmp_path, monkeypatch):
-    """TOKENQC_PHASE_DETAIL only changes when the violations frame is
-    materialized (attribution vs single fused compute+write pass) —
-    outputs are identical; each mode stamps its own timing mark."""
-    import os
-
-    cfg = CheckConfig(n_partitions=4, checks=("completeness",))
-    monkeypatch.setenv("TOKENQC_PHASE_DETAIL", "1")
-    r1 = QCRunner(spark, cfg, out_dir=str(tmp_path / "pd1")).run(
-        tables["sequences"], run_id="pd1"
-    )
-    monkeypatch.delenv("TOKENQC_PHASE_DETAIL")
-    r2 = QCRunner(spark, cfg, out_dir=str(tmp_path / "pd2")).run(
-        tables["sequences"], run_id="pd2"
-    )
-    assert r1.violations.count() == r2.violations.count()
-    assert sorted(
-        (r.partition_id, r.check_name, r.status) for r in r1.verdicts.collect()
-    ) == sorted((r.partition_id, r.check_name, r.status) for r in r2.verdicts.collect())
-    assert "violations_compute" in r1.timings and "violations_write" in r1.timings
-    assert "violations_compute_write" in r2.timings
-    assert "violations_compute" not in r2.timings
-
-
 def test_degenerate_gate_end_to_end(spark, tmp_path):
     """The degenerate-content gate as an engine check: planted
     entropy-collapse and tiling rows land as violation rows with the
@@ -383,3 +359,85 @@ def test_degenerate_gate_end_to_end(spark, tmp_path):
     assert dverd.count() == 4
     assert dverd.where("status = 'FAIL'").count() >= 1
     assert res.verdicts.where("check_name = 'completeness'").count() == 4
+
+
+# ---------------------------------------------------------------------------
+# one code path per kind of check family
+# ---------------------------------------------------------------------------
+def test_errored_drift_is_run_level_unknown(spark, tables, tmp_path, monkeypatch):
+    """A source-level family that errors while planning is not silent:
+    it gets the same run-level UNKNOWN row a missing baseline gets, and
+    the partitions still complete (drift is graded per source, not per
+    partition)."""
+    from tokenqc.checks import drift
+
+    def boom(*a, **k):
+        raise RuntimeError("drift exploded")
+
+    monkeypatch.setattr(drift, "verdicts", boom)
+    runner = QCRunner(spark, CheckConfig(n_partitions=4), out_dir=str(tmp_path / "qde"))
+    res = runner.run(
+        tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        baseline_hist=tables["baseline_hist"],
+        reference_tokens=tables["reference_tokens"],
+        run_id="de",
+    )
+    assert "drift" in res.errors
+    rows = res.verdicts.where("check_name like 'drift%'").collect()
+    assert [(r.partition_id, r.check_name, r.status, r.n_rows, r.n_viol) for r in rows] == [
+        (-1, "drift", "UNKNOWN", 0, 0)
+    ]
+    assert "drift exploded" in rows[0].details
+    assert res.state.where("status not in ('PASS','FAIL')").count() == 0
+
+
+def test_invariant_rows_independent_of_other_checks(spark, tables, tmp_path, expected):
+    """The invariant takes one path: an invariant-only run writes the
+    same (doc_id, check_name, observed) rows as a run with every row
+    check on."""
+
+    def invariant_rows(checks, out):
+        res = QCRunner(
+            spark, CheckConfig(n_partitions=4, checks=checks), out_dir=str(tmp_path / out)
+        ).run(
+            tables["sequences"],
+            allowed_sources=tables["allowed_sources"],
+            reference_tokens=tables["reference_tokens"],
+            run_id=out,
+        )
+        assert res.errors == {}
+        return sorted(
+            (r.doc_id, r.check_name, r.observed)
+            for r in res.violations.where("check_name = 'invariant'").collect()
+        )
+
+    alone = invariant_rows(("invariant",), "inv1")
+    assert len(alone) == len(expected.perturbed_ref)
+    everything = ("completeness", "structural", "format", "referential", "invariant")
+    assert alone == invariant_rows(everything, "inv2")
+
+
+def test_timing_keys_match_benchmark_phases(spark, tables, tmp_path):
+    """perfbench reads each phase with timings.get(p, 0.0), so a renamed
+    phase would report 0 s there silently: a default run's timing keys
+    are exactly the PHASES tuple of perfbench/run.py (parsed, not
+    imported — that script imports its siblings by bare name)."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "run.py"
+    phases = next(
+        ast.literal_eval(node.value)
+        for node in ast.parse(src.read_text()).body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "PHASES" for t in node.targets)
+    )
+    res = QCRunner(spark, CheckConfig(n_partitions=4), out_dir=str(tmp_path / "qt")).run(
+        tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        baseline_hist=tables["baseline_hist"],
+        reference_tokens=tables["reference_tokens"],
+        run_id="t1",
+    )
+    assert sorted(res.timings) == sorted(phases)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyarrow.parquet as pq
 
 from tokenqc import streaming, synth
+from tokenqc.checks import row_level_facets
 from tokenqc.checks.base import CheckConfig
 
 
@@ -78,6 +79,29 @@ def test_incremental_file_arrival(spark, tmp_path):
     q2 = streaming.qc_stream(spark, str(inp), out, _allowed(spark), CheckConfig(n_partitions=8))
     assert q2.awaitTermination(420), 'stream did not finish'
     assert spark.read.parquet(f"{out}/violations_stream").count() == 2 * n1
+
+
+def test_qc_stream_honours_checks(spark, tmp_path):
+    """The stream grades only the checks cfg.checks lists, like the
+    batch runner: with checks=("completeness",) the planted format,
+    structural and referential violations write no rows."""
+    inp = tmp_path / "sub_in"
+    inp.mkdir()
+    seq = synth.generate_sequences(2000, seed=42)
+    pq.write_table(seq, str(inp / "f1.parquet"))
+    out = str(tmp_path / "sub_out")
+    cfg = CheckConfig(n_partitions=8, checks=("completeness",))
+    q = streaming.qc_stream(spark, str(inp), out, _allowed(spark), cfg, run_id="sub")
+    assert q.awaitTermination(420), 'stream did not finish'
+
+    viol = spark.read.parquet(f"{out}/violations_stream")
+    checks = {r.check_name for r in viol.select("check_name").distinct().collect()}
+    assert checks == {"completeness"}
+    exp = synth.plan_expected(2000)
+    assert viol.count() == (
+        len(exp.null_doc_id) + len(exp.null_tokens) + len(exp.empty_tokens)
+        + len(exp.null_ntok) + len(exp.null_source)
+    )
 
 
 def test_running_source_stats_stateful_across_restart(spark, tmp_path):
@@ -472,7 +496,7 @@ def test_streaming_token_lints_match_batch(spark, tmp_path):
         referential.attach(
             static.withColumn("partition_id", cb.partition_id_col(cfg)), allowed
         ),
-        streaming._row_facets(cfg),
+        row_level_facets(cfg),
     )
     want = norm(batch)
     assert got == want
@@ -485,10 +509,10 @@ def test_streaming_token_lints_match_batch(spark, tmp_path):
     # unconfigured lints stay out of the stream: with every token id
     # None, facets() contributes nothing even when "tokens" is listed
     assert len(
-        streaming._row_facets(
+        row_level_facets(
             CheckConfig(n_partitions=4, checks=CheckConfig().checks + ("tokens",))
         )
-    ) == len(streaming._row_facets(CheckConfig(n_partitions=4)))
+    ) == len(row_level_facets(CheckConfig(n_partitions=4)))
 
 
 def test_streaming_token_drift_matches_batch_and_restarts(spark, tmp_path):

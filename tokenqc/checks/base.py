@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 
 DOC_ID_PATTERN = r"^doc-\d{8}$"
 
+# the long-format violation row every check family emits
+VIOLATION_SCHEMA = (
+    "partition_id int, doc_id string, check_name string, "
+    "observed string, expected string"
+)
+
 
 @dataclass
 class CheckConfig:

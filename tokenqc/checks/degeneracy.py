@@ -42,11 +42,6 @@ from tokenqc.checks import base as cb
 
 CHECK = "degenerate"
 
-_EMPTY = (
-    "partition_id int, doc_id string, check_name string, "
-    "observed string, expected string"
-)
-
 
 def _flag(cond, facet: str, stat: str, expected: str):
     """(observed, expected) struct for rows where `cond` holds, else
@@ -88,7 +83,7 @@ def violations(df: DataFrame, cfg: cb.CheckConfig) -> DataFrame:
             f"duplicated {k}-gram fraction <= {cfg.max_dup_kgram_frac}",
         ))
     if not kernels:
-        return df.sparkSession.createDataFrame([], _EMPTY)
+        return df.sparkSession.createDataFrame([], cb.VIOLATION_SCHEMA)
     stats = textqc._token_pass(
         df, "doc_id", "tokens", kernels, carry_cols=("partition_id",),
         min_len=1 if cfg.min_entropy is not None else k,

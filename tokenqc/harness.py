@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tokenqc.checks import base as cb
-from tokenqc.checks import completeness, format as format_check, referential, structural
+from tokenqc.checks import format as format_check, referential, row_level_facets
 
 N_PART = 16
 CFG = cb.CheckConfig(n_partitions=N_PART)
@@ -173,14 +173,7 @@ def _facet_count_sql() -> str:
 
 
 def _spark_row_facets(df: DataFrame, allowed: DataFrame) -> tuple[DataFrame, list[cb.Facet]]:
-    df = referential.attach(df, allowed)
-    facets = (
-        completeness.facets(CFG)
-        + structural.facets(CFG)
-        + format_check.facets(CFG)
-        + referential.facets(CFG)
-    )
-    return df, facets
+    return referential.attach(df, allowed), row_level_facets(CFG)
 
 
 def _allowed_sources_df(spark: SparkSession) -> DataFrame:

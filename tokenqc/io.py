@@ -89,14 +89,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    try:
-        fs, jpath = _hadoop_fs(spark, path)
-        return bool(fs.exists(jpath))
-    except Exception:
-        return False
-
-
 def _delete(spark: SparkSession, path: str) -> None:
     fs, jpath = _hadoop_fs(spark, path)
     if fs.exists(jpath):
@@ -146,16 +138,10 @@ def write_batch(df: DataFrame, base_dir: str, table: str, run_id: str, batch: in
     return path
 
 
-def append_state(df: DataFrame, base_dir: str, run_id: str, batch: int) -> str:
-    """qc_state rows for one batch (same idempotent overwrite-by-batch)."""
-    return write_batch(df, base_dir, "qc_state", run_id, batch)
-
-
 def write_batch_rows(
     spark: SparkSession,
     rows: list,
     ddl: str,
-    arrow_schema,
     base_dir: str,
     table: str,
     run_id: str,
@@ -175,8 +161,11 @@ def write_batch_rows(
     and non-file schemes (hdfs://, s3a://) keep the Spark write path:
     their commit protocols must go through the catalog/FS committer.
 
-    `rows` are tuples (or Rows) field-aligned with `arrow_schema`;
-    `ddl` is the Spark schema for the fallback frame.
+    `rows` are tuples (or Rows) field-aligned with `ddl`, the Spark
+    schema of the slice; the fast path's Arrow schema is derived from it
+    with Spark's own type mapping (a ``timestamp`` column becomes
+    ``timestamp[us, tz=UTC]``, so Spark reads it back as TimestampType,
+    exactly as its own writer would have stored it).
 
     Local-vs-remote is decided by resolving the path's scheme through
     the Hadoop FileSystem API (`_local_file_path`), NOT by string
@@ -197,11 +186,13 @@ def write_batch_rows(
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     path = os.path.join(local, table, f"run_id={run_id}", f"batch={batch}")
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
-    schema = pa.schema(arrow_schema)
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
     cols = list(zip(*rows)) if rows else [[] for _ in schema]
     tbl = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema

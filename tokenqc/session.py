@@ -40,15 +40,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # allow shuffled-hash joins where the build side fits (guide
-        # §3.1): the engine's equi-joins are overwhelmingly slim
-        # digest/hash/id frames whose per-partition build maps are tiny,
-        # and SHJ skips both sort passes of sort-merge. The planner-side
-        # switch uses size estimates; the AQE threshold is the
-        # runtime-stat-backed version (SMJ -> SHJ when every post-shuffle
-        # partition is under 64 MB — bounded build memory per task, so
-        # the setting is scale-safe, not a local[32] tune).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # shuffled-hash joins only where runtime statistics prove the
+        # build side small: AQE re-plans a sort-merge join as SHJ when
+        # every post-shuffle partition is under 64 MB, so each task's
+        # build map is bounded by measured sizes, never by a planner
+        # estimate that can undercount (an SHJ has no spill fallback).
+        # The engine's equi-joins are mostly slim digest/hash/id frames,
+        # where SHJ skips both sort passes of sort-merge.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),

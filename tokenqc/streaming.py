@@ -8,8 +8,9 @@ on Spark's streaming checkpoint (file-source offsets), composing with —
 not replacing — the batch qc_state story.
 
 Only row-level gates run per micro-batch (completeness, structural,
-format, referential, and the opt-in token-array lints): they are
-embarrassingly incremental. Global gates
+format, referential, the opt-in token-array lints and the degenerate
+gate), selected from ``cfg.checks`` exactly as the batch runner selects
+them: they are embarrassingly incremental. Global gates
 (uniqueness, drift) need cross-batch state and stay in the batch runner;
 a watermarked streaming-dedup variant is expressible with
 ``dropDuplicatesWithinWatermark`` when an event-time column exists.
@@ -23,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tokenqc.checks import base as cb
-from tokenqc.checks import completeness, format as format_check, referential, structural
-from tokenqc.checks import tokens as token_lints
+from tokenqc.checks import degeneracy, referential, row_level_facets
 from tokenqc.schema import SEQUENCES
 
 # Version suffix for the default stateful-operator checkpoint dir.
@@ -37,21 +37,6 @@ from tokenqc.schema import SEQUENCES
 # checkpoint_dir across an upgrade must discard it (or re-key it)
 # themselves: there is no state migration.
 STATE_SCHEMA_VERSION = 2
-
-
-def _row_facets(cfg: cb.CheckConfig) -> list[cb.Facet]:
-    fs = (
-        completeness.facets(cfg)
-        + structural.facets(cfg)
-        + format_check.facets(cfg)
-        + referential.facets(cfg)
-    )
-    # token-array lints are row-level and stateless, so they stream for
-    # free; same opt-in contract as the batch runner ("tokens" listed in
-    # cfg.checks AND at least one lint configured non-None)
-    if "tokens" in cfg.checks:
-        fs += token_lints.facets(cfg)
-    return fs
 
 
 def qc_stream(
@@ -71,20 +56,23 @@ def qc_stream(
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     stream = spark.readStream.schema(SEQUENCES).parquet(input_dir)
 
+    facets = row_level_facets(cfg)
+
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        df = referential.attach(
-            batch_df.withColumn("partition_id", cb.partition_id_col(cfg)), allowed_sources
-        )
-        viol = cb.assemble_violations(df, _row_facets(cfg))
+        df = batch_df.withColumn("partition_id", cb.partition_id_col(cfg))
+        if "referential" in cfg.checks:
+            df = referential.attach(df, allowed_sources)
+        parts = [cb.assemble_violations(df, facets)] if facets else []
         # the degenerate-content gate is row-level and stateless like the
         # lints, but Arrow-staged — it joins the batch as a second pass
-        # under the same opt-in contract as the batch runner
-        if "degenerate" in cfg.checks and (
-            cfg.min_entropy is not None or cfg.max_dup_kgram_frac is not None
-        ):
-            from tokenqc.checks import degeneracy
-
-            viol = viol.unionByName(degeneracy.violations(df, cfg))
+        # (no Arrow job when none of its facets is configured)
+        if "degenerate" in cfg.checks:
+            parts.append(degeneracy.violations(df, cfg))
+        if not parts:
+            return
+        viol = parts[0]
+        for extra in parts[1:]:
+            viol = viol.unionByName(extra)
         (
             viol.withColumn("run_id", F.lit(run_id))
             .withColumn("epoch", F.lit(epoch_id))

@@ -694,6 +694,13 @@ def dsir_weights(
     features; the per-doc sum partial-aggs before its shuffle. Zero
     Python anywhere.
 
+    Two consequences of that ``localCheckpoint(eager=True)`` for the
+    caller: calling this function (building the DataFrame, before any
+    action on it) already runs one job that scans the whole corpus;
+    and the checkpoint cuts lineage — the model blocks live only in
+    executor storage, so if an executor holding them is lost, the
+    downstream query fails instead of recomputing them.
+
     The bucket hash is the repo's portable md5 idiom
     (first-8-hex-chars of md5(salt || feature) mod n_buckets), so the
     oracle replays it bit-for-bit in DuckDB. The log-ratio rounds to 5
